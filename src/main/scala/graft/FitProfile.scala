@@ -39,13 +39,13 @@ object FitProfile {
     }
     var cs2 = seeds
     (1 to 10).foreach { i =>
-      cs2 = t(s"lloydStepFast(literal) #$i")(KMeans.lloydStepFast(KMeans.assign(pts, cs2), 64, 1e6))
+      cs2 = t(s"lloydStep(literal) #$i")(KMeans.lloydStep(KMeans.assign(pts, cs2), 64, 1e6))
     }
     var cs3 = seeds
     (1 to 10).foreach { i =>
       cs3 = t(s"lloydStepOnePass #$i")(KMeans.lloydStepOnePass(pts, cs3, 64, 1e6))
     }
-    System.out.println(s"[profile] onePass == fast: ${cs3 == cs2}")
+    System.out.println(s"[profile] onePass == literal: ${cs3 == cs2}")
     System.out.println(s"[profile] same centroids: ${cs == cs2}")
 
     // phase split of one literal step: analysis+optimization+physical planning
@@ -81,7 +81,7 @@ object FitProfile {
       var move = Double.MaxValue
       while (move >= 0.01 && step < 50) {
         step += 1
-        val next = t(f"  step $step%2d")(KMeans.lloydStepFast(KMeans.assign(pts, mcs), 64, 1e6))
+        val next = t(f"  step $step%2d")(KMeans.lloydStep(KMeans.assign(pts, mcs), 64, 1e6))
         move = KMeans.movement(mcs, next)
         mcs = next
       }

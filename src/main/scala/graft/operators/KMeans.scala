@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps._
@@ -319,11 +319,6 @@ object KMeans {
     val n = xs.length
     if (n <= k) return xs.toSeq
     val rnd = new scala.util.Random(seed)
-    def sq(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var d = 0
-      while (d < a.length) { val t = a(d) - b(d); s += t * t; d += 1 }
-      s
-    }
     // weighted ++ seeding
     val centers = scala.collection.mutable.ArrayBuffer(xs(rnd.nextInt(n)))
     val minD = Array.fill(n)(Double.MaxValue)
@@ -331,7 +326,7 @@ object KMeans {
       var i = 0
       var tot = 0.0
       while (i < n) {
-        val d = sq(xs(i), centers.last)
+        val d = sqd(xs(i), centers.last)
         if (d < minD(i)) minD(i) = d
         tot += minD(i) * w(i)
         i += 1
@@ -357,8 +352,7 @@ object KMeans {
       val cnts = Array.fill(k)(0.0)
       var i = 0
       while (i < n) {
-        var best = 0; var bd = Double.MaxValue; var j = 0
-        while (j < k) { val d = sq(xs(i), cs(j)); if (d < bd) { bd = d; best = j }; j += 1 }
+        val best = nearestIx(xs(i), cs)
         var d = 0
         while (d < dim) { sums(best)(d) += xs(i)(d) * w(i); d += 1 }
         cnts(best) += w(i)
@@ -366,7 +360,7 @@ object KMeans {
       }
       val next = Array.tabulate(k)(j =>
         if (cnts(j) > 0) Array.tabulate(dim)(d => sums(j)(d) / cnts(j)) else cs(j))
-      moved = next.zip(cs).exists { case (a, b) => sq(a, b) > 1e-12 }
+      moved = next.zip(cs).exists { case (a, b) => sqd(a, b) > 1e-12 }
       cs = next
       it += 1
     }
@@ -411,37 +405,17 @@ object KMeans {
       Centroid(r.getLong(0), r.getSeq[Double](2))
     }.toSeq.sortBy(_.j)
 
-  /** Same values as [[lloydStep]] (fixed-point path), via ONE
-    * `vector_sum_long` aggregate instead of `dim` per-coordinate aggregates —
-    * the Catalyst analysis/optimization cost per iteration drops from
-    * O(dim) expressions to O(1), which dominates the fit loop's wall time
-    * (every iteration is a fresh plan: the centroid literals change).
-    * Rounding is applied by the same `round(x*scale)::long` expression, and
-    * long sums are exact in any merge order, so the centroid doubles are
-    * bit-identical to the per-dimension form.
-    */
-  def lloydStepFast(assigned: DataFrame, dim: Int, fxScale: Double): Seq[Centroid] = {
-    val fx = transform(col("Y"), v => round(v * fxScale).cast("long"))
-    assigned.groupBy("j")
-      .agg(count(lit(1)).as("n"), graft.plans.native.vector_sum_long(fx, dim).as("s"))
-      .collect().map { r =>
-        val n = r.getLong(1)
-        val sums = r.getSeq[Long](2)
-        Centroid(r.getLong(0), sums.map(s => s.toDouble / fxScale / n))
-      }.toSeq.sortBy(_.j)
-  }
-
   /** One Lloyd iteration as a SINGLE STAGE: assignment + fixed-point
     * per-partition sufficient statistics run inside one codegen'd scan, and
     * the ≤ P·k partial rows merge on the driver — the
     * collect-sufficient-stats shape MLlib's KMeans uses (its `runAlgorithm`
     * folds per-partition (sum, count) pairs via `treeAggregate`; public
     * Spark source, mllib/clustering/KMeans.scala). Value-identical to
-    * [[lloydStepFast]]: the same `round(x*scale)::long` fixed-point
+    * [[lloydStep]]: the same `round(x*scale)::long` fixed-point
     * projection feeds the per-partition accumulators, and long adds are
     * exact in any order (pinned in KMeansSpec).
     *
-    * Why it exists: [[lloydStepFast]] is the declarative form (and stays the
+    * Why it exists: [[lloydStep]] is the declarative form (and stays the
     * `km_lloyd_step` oracle query), but its final-aggregate stage — however
     * small — costs a shuffle boundary per iteration: shuffle-file write +
     * read, a second stage submit, and one more scheduling round-trip, ~50 ms
@@ -453,7 +427,16 @@ object KMeans {
     */
   def lloydStepOnePass(points: DataFrame, cs: Seq[Centroid], dim: Int,
       fxScale: Double): Seq[Centroid] =
-    onePassStats(points, cs, dim, fxScale).map { case (j, (sums, n)) =>
+    means(onePassStats(points, cs, dim, fxScale), fxScale)
+
+  /** Per-centroid fixed-point sufficient statistics `j → (Σfx, n)`; a
+    * centroid no row picked is absent (the reference's GROUP BY drop).
+    */
+  private type Stats = scala.collection.mutable.LongMap[(Array[Long], Long)]
+
+  /** New centroids from [[Stats]], in j order: `Σfx / fxScale / n`. */
+  private def means(stats: Stats, fxScale: Double): Seq[Centroid] =
+    stats.iterator.map { case (j, (sums, n)) =>
       Centroid(j, sums.toSeq.map(s => s.toDouble / fxScale / n))
     }.toSeq.sortBy(_.j)
 
@@ -463,7 +446,7 @@ object KMeans {
     * codegen'd scan, ≤ P·k partial rows merged on the driver.
     */
   private def onePassStats(points: DataFrame, cs: Seq[Centroid], dim: Int,
-      fxScale: Double): scala.collection.mutable.LongMap[(Array[Long], Long)] = {
+      fxScale: Double): Stats = {
     val fx = transform(col("Y"), v => round(v * fxScale).cast("long"))
     val proj = assign(points, cs).select(col("j"), fx.as("yfx"))
     val d = dim
@@ -493,7 +476,7 @@ object KMeans {
 
   /** One Lloyd iteration (assign + re-average) with centroids shipped as
     * broadcast DATA instead of literals — value-identical to
-    * `lloydStepFast(assign(points, cs), dim, fxScale)`:
+    * `lloydStep(assign(points, cs), dim, fxScale)`:
     * [[graft.plans.native.nearestIdCols]] is the same argmin fold, and the
     * fixed-point long sums are merge-order exact.
     *
@@ -718,20 +701,27 @@ object KMeans {
 
   // ----------------------------------------------------- size-aware local fit
 
+  /** The one driver-local size gate, in collected cells (`rows·dim`
+    * doubles, 32 MB): every k-means fit with a driver-local twin runs it
+    * when `rows·dim ≤ localMaxCells` and its distributed chain otherwise;
+    * `localMaxCells = 0` forces the distributed chain on non-empty input.
+    */
+  val LocalMaxCells: Long = 4000000L
+
   /** Size-aware fit: identical results to [[fit]] (bitwise, pinned in
     * KMeansSpec), picked by input size — the optimizer move every mature
     * engine makes. When `rows·dim` fits comfortably on the driver
-    * (`localMaxCells`, default 4M doubles = 32 MB), the 30-odd Lloyd
-    * iterations stop paying ~0.1 s of per-job scheduling each and run as a
-    * tight local loop on data collected ONCE; past the threshold — i.e. at
-    * any real scale — the distributed loop runs unchanged. The `plusPlus`
-    * seeding path stays distributed at any size: its `rand(seed)` draw is
-    * partition-seeded and has no order-independent local twin.
+    * ([[LocalMaxCells]]), the 30-odd Lloyd iterations stop paying ~0.1 s of
+    * per-job scheduling each and run as a tight local loop on data
+    * collected ONCE; past the threshold — i.e. at any real scale — the
+    * distributed loop runs unchanged. The `plusPlus` seeding path stays
+    * distributed at any size: its `rand(seed)` draw is partition-seeded and
+    * has no order-independent local twin.
     */
   def fitAuto(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
       maxIter: Int = 50, seed: Long = 42L, plusPlus: Boolean = false,
       fxScale: Double = 1e6, parallelSeed: Boolean = false,
-      localMaxCells: Long = 4000000L): FitResult = {
+      localMaxCells: Long = LocalMaxCells): FitResult = {
     lazy val n = points.count()
     if (plusPlus || fxScale <= 0 || n * dim > localMaxCells)
       fit(points, k, dim, tol, maxIter, seed, plusPlus, fxScale, parallelSeed)
@@ -739,117 +729,136 @@ object KMeans {
   }
 
   /** Driver-local twin of [[fit]] for small inputs — produces the identical
-    * `FitResult` bit-for-bit. Exactness by construction:
-    *  - the ONE collect computes the fixed-point vectors and the k-means||
-    *    sampling coins with the SAME Catalyst expressions the distributed
-    *    path uses (`round(x·scale)::long`, [[coinCol]]), so no local
-    *    re-implementation of Spark rounding/hashing exists to drift;
-    *  - local distance/argmin loops replicate the native kernels' exact
-    *    IEEE fold order (`sq_dist`'s left-to-right `acc += d²`,
-    *    `nearestIdCols`' strict-`<` earliest-wins tie break);
-    *  - cluster sums are exact longs, order-independent by definition;
-    *  - `phi` is the same `sum(round(d²)::long)` integer total (the only
-    *    local rounding — `roundHalfUpLong` — is pinned against Spark's
-    *    `round()` in PropertySpec).
+    * `FitResult` bit-for-bit: [[collectLocal]]'s one collect, local twins of
+    * [[seedFirstK]] / [[seedParallel]], then [[fitFromLocal]]. The
+    * k-means|| sampling coins ride the collect, computed by the SAME
+    * Catalyst expression the distributed path uses ([[coinCol]]); `phi` is
+    * the same `sum(round(d²)::long)` integer total as `sumFx(d2, 1.0)`.
     */
   def fitLocal(points: DataFrame, k: Int, dim: Int, tol: Double,
       maxIter: Int, seed: Long, fxScale: Double, parallelSeed: Boolean,
       rounds: Int = 3, overFactor: Double = 2.0): FitResult = {
-    // one pass over the data: Y, fixed-point Y, and the per-round coins, in
-    // key order (the local stand-in for every orderBy("i") in the seeders)
-    val fxCol = transform(col("Y"), v => round(v * fxScale).cast("long"))
-    val uCols = (1 to (if (parallelSeed) rounds else 0))
-      .map(r => coinCol(seed, r).as(s"_u$r"))
-    val rows = points
-      .select(Seq(col("i"), col("Y").as("_y"), fxCol.as("_fx")) ++ uCols: _*)
-      .orderBy("i").collect()
-    val nRows = rows.length
-    val ys = Array.tabulate(nRows)(ix => rows(ix).getSeq[Double](1).toArray)
-    val fxs = Array.tabulate(nRows)(ix => rows(ix).getSeq[Long](2).toArray)
-    val us = Array.tabulate(nRows)(ix =>
-      Array.tabulate(uCols.size)(r => rows(ix).getDouble(3 + r)))
-
-    // sq_dist's exact fold: left-to-right acc += (c[d]-y[d])²
-    def sqd(c: Array[Double], y: Array[Double]): Double = {
-      var s = 0.0; var d = 0
-      val lim = math.min(c.length, y.length)
-      while (d < lim) { val t = c(d) - y(d); s += t * t; d += 1 }
-      s
-    }
-    def nearestSq(y: Array[Double], css: Array[Array[Double]]): Double = {
-      var m = Double.MaxValue; var j = 0
-      while (j < css.length) { val v = sqd(css(j), y); if (v < m) m = v; j += 1 }
-      m
-    }
-    def nearestIx(y: Array[Double], css: Array[Array[Double]]): Int = {
-      var bi = -1; var bd = Double.MaxValue; var j = 0
-      while (j < css.length) { val v = sqd(css(j), y); if (v < bd) { bd = v; bi = j }; j += 1 }
-      bi
-    }
-
-    // ---- seeding: local twin of seedParallel / seedFirstK
-    var cs: Seq[Centroid] =
-      if (!parallelSeed) {
-        (0 until math.min(k, nRows)).map(ix => Centroid(ix + 1L, ys(ix).toSeq))
-      } else {
+    val uCols = (1 to (if (parallelSeed) rounds else 0)).map(coinCol(seed, _))
+    val (pts, rows) = collectLocal(points, dim, fxScale, uCols: _*)
+    val ys = pts.ys
+    val cs =
+      if (!parallelSeed) firstKLocal(pts, k)
+      else {
         var cands = Vector[Seq[Double]](ys(0).toSeq)
         val l = overFactor * k
         for (r <- 1 to rounds) {
           val candArr = cands.map(_.toArray).toArray
-          // phi: the same sum(round(d²·1.0)::long) integer total as
-          // sumFx(d2, 1.0) — order-independent by integer addition
-          var phiL = 0L
-          var ix = 0
-          while (ix < nRows) { phiL += roundHalfUpLong(nearestSq(ys(ix), candArr) * 1.0); ix += 1 }
-          val phi = phiL.toDouble / 1.0
+          val d2 = ys.map(nearestSqLocal(_, candArr))
+          val phi = d2.map(v => roundHalfUpLong(v * 1.0)).sum.toDouble / 1.0
           if (phi > 0) {
-            val drawn = (0 until nRows).iterator
-              .filter(ix => us(ix)(r - 1) * phi < nearestSq(ys(ix), candArr) * l)
-              .map(ix => ys(ix).toVector).toVector
+            val drawn = ys.indices // coin r rides at row column 1 + r
+              .filter(ix => rows(ix).getDouble(1 + r) * phi < d2(ix) * l)
+              .map(ix => ys(ix).toVector)
             cands = (cands ++ drawn).distinct
           }
         }
         val candArr = cands.map(_.toArray).toArray
-        val wByIx = new Array[Long](candArr.length)
-        var ix = 0
-        while (ix < nRows) { wByIx(nearestIx(ys(ix), candArr)) += 1; ix += 1 }
-        localWeightedKMeans(candArr, wByIx.map(_.toDouble), k, seed)
-          .zipWithIndex.map { case (c, i2) => Centroid(i2 + 1L, c.toSeq) }
+        val w = new Array[Double](candArr.length)
+        ys.foreach(y => w(nearestIx(y, candArr)) += 1)
+        localWeightedKMeans(candArr, w, k, seed)
+          .zipWithIndex.map { case (c, ix) => Centroid(ix + 1L, c.toSeq) }
       }
-
-    // ---- Lloyd loop: same stop rule, log shape, and empty-cluster drop
-    var log = cs.map(c => LogEntry(0L, c.j, c.c))
-    var step = 0L
-    var move = Double.MaxValue
-    while (move >= tol && step < maxIter) {
-      step += 1
-      val ids0 = ids(cs).toArray
-      val css = coords(cs).map(_.toArray).toArray
-      val sums = Array.fill(css.length)(new Array[Long](dim))
-      val cnts = new Array[Long](css.length)
-      var ix = 0
-      while (ix < nRows) {
-        val a = nearestIx(ys(ix), css)
-        val f = fxs(ix)
-        val s = sums(a)
-        var d = 0
-        while (d < dim) { s(d) += f(d); d += 1 }
-        cnts(a) += 1
-        ix += 1
-      }
-      val next = ids0.indices.collect {
-        case j if cnts(j) > 0 =>
-          Centroid(ids0(j), sums(j).toSeq.map(s => s.toDouble / fxScale / cnts(j)))
-      }.toSeq.sortBy(_.j)
-      if (next.size < cs.size)
-        logger.warn(
-          s"kmeans: ${cs.size - next.size} cluster(s) emptied at step $step (reference drop semantics)")
-      move = movement(cs, next)
-      cs = next
-      log = log ++ cs.map(c => LogEntry(step, c.j, c.c))
-    }
-    FitResult(cs, log, step, move)
+    fitFromLocal(pts, cs, tol, maxIter)
   }
+
+  // ------------------------------------------------ driver-local Lloyd kernel
+
+  /** Points collected ONCE for a driver-local twin, in key order (the local
+    * stand-in for every `orderBy("i")` in the distributed seeders): ids,
+    * `Y`, and the fixed-point `roundHalfUpLong(y·fxScale)` computed once
+    * here, outside every loop ([[roundHalfUpLong]] ≡ Spark `round`, pinned
+    * in PropertySpec).
+    */
+  private[operators] final class LocalPoints(val ids: Array[Long],
+      val ys: Array[Array[Double]], val dim: Int, val fxScale: Double) {
+    val fxs: Array[Array[Long]] = ys.map { y =>
+      val f = new Array[Long](dim)
+      var d = 0
+      while (d < dim) { f(d) = roundHalfUpLong(y(d) * fxScale); d += 1 }
+      f
+    }
+  }
+
+  /** The one key-ordered collect behind every driver-local twin. `extra`
+    * columns ride along from index 2 of the returned rows.
+    */
+  private[operators] def collectLocal(points: DataFrame, dim: Int,
+      fxScale: Double, extra: Column*): (LocalPoints, Array[Row]) = {
+    val rows = points.select(Seq(col("i"), col("Y")) ++ extra: _*)
+      .orderBy("i").collect()
+    (new LocalPoints(rows.map(_.getLong(0)),
+      rows.map(_.getSeq[Double](1).toArray), dim, fxScale), rows)
+  }
+
+  /** `sq_dist`'s exact IEEE fold: left-to-right `acc += (c[d] − y[d])²`
+    * over `min(c.length, y.length)`.
+    */
+  private def sqd(c: Array[Double], y: Array[Double]): Double = {
+    var s = 0.0; var d = 0
+    val lim = math.min(c.length, y.length)
+    while (d < lim) { val t = c(d) - y(d); s += t * t; d += 1 }
+    s
+  }
+
+  /** `nearest_sq_dist`'s fold: strict-`<` minimum from `Double.MaxValue`. */
+  private[operators] def nearestSqLocal(y: Array[Double],
+      css: Array[Array[Double]]): Double = {
+    var m = Double.MaxValue; var j = 0
+    while (j < css.length) { val v = sqd(css(j), y); if (v < m) m = v; j += 1 }
+    m
+  }
+
+  /** `nearestIdCols`' fold: strict `<` from `Double.MaxValue`, so the
+    * earliest centroid wins a tie. Returns the position in `css`.
+    */
+  private def nearestIx(y: Array[Double], css: Array[Array[Double]]): Int = {
+    var bi = -1; var bd = Double.MaxValue; var j = 0
+    while (j < css.length) { val v = sqd(css(j), y); if (v < bd) { bd = v; bi = j }; j += 1 }
+    bi
+  }
+
+  /** THE driver-local Lloyd kernel, the local twin of [[onePassStats]]:
+    * assign every row `keep` admits to its nearest centroid and sum its
+    * fixed-point vector. Long sums are exact in any order, so the result
+    * equals the distributed statistics bit-for-bit.
+    */
+  private def localStats(pts: LocalPoints, cs: Seq[Centroid],
+      keep: Int => Boolean = _ => true): Stats = {
+    val css = cs.map(_.c.toArray).toArray
+    val sums = css.map(_ => new Array[Long](pts.dim))
+    val cnts = new Array[Long](css.length)
+    var ix = 0
+    while (ix < pts.ys.length) {
+      if (keep(ix)) {
+        val a = nearestIx(pts.ys(ix), css)
+        val s = sums(a)
+        val f = pts.fxs(ix)
+        var d = 0
+        while (d < f.length) { s(d) += f(d); d += 1 }
+        cnts(a) += 1
+      }
+      ix += 1
+    }
+    val stats: Stats = scala.collection.mutable.LongMap.empty
+    cs.indices.foreach(a => if (cnts(a) > 0) stats(cs(a).j) = (sums(a), cnts(a)))
+    stats
+  }
+
+  /** Local twin of [[seedFirstK]]: the k smallest keys, j = 1..k. */
+  private def firstKLocal(pts: LocalPoints, k: Int): Seq[Centroid] =
+    (0 until math.min(k, pts.ys.length)).map(ix => Centroid(ix + 1L, pts.ys(ix).toSeq))
+
+  /** Driver-local twin of [[fitFrom]] (fresh run): [[lloyd]] over
+    * [[localStats]] and the same fixed-point re-average.
+    */
+  private[operators] def fitFromLocal(pts: LocalPoints, init: Seq[Centroid],
+      tol: Double, maxIter: Int): FitResult =
+    lloyd(init, tol, maxIter)((_, cs) => means(localStats(pts, cs), pts.fxScale))
 
   /** Spark's `round(x)` for doubles (`BigDecimal(x).setScale(0, HALF_UP)`)
     * followed by a long cast — the ONE Spark scalar the local kernels must
@@ -991,79 +1000,36 @@ object KMeans {
     (3L, 7L), (5L, 11L), (7L, 13L), (11L, 17L))
   def fixedU(r: Int): (Long, Long) = FixedUs((r - 2) % FixedUs.size)
 
-  /** Bounded ORACLE-REPLAYABLE fit — the km_gap_fitted discipline as a
-    * standalone entry point: exact inverse-CDF k-means++ seeding with the
-    * [[FixedUs]] rational draws (first seed = the min-key point, the
-    * reference's deterministic pick), then [[fitFrom]]'s movement-gated
-    * Lloyd bounded at `lloydSteps` iterations. Every stage is
-    * ANSI-expressible (anti-join by coordinates, integer D² weights,
-    * windowed cumulative threshold pick, fixed-point re-averages), so a
-    * query built on the returned centroids can be DuckDB-oracle
-    * hash-checked END TO END (`sim_ivf_fitted`). `weightScale` lifts the
-    * D² draw weights into integer range for small-coordinate data
-    * (L2-normalized vectors: 1e6 — at weightScale 1 their sub-4.0 squared
-    * distances would round to a handful of integer ties and degrade the
-    * draw).
-    *
-    * Bounding the Lloyd loop at `lloydSteps` movement-gated iterations is
-    * the published cost of hash-exactness (the km_wcr_log contract); on
-    * data where Lloyd converges within the budget the bounded and free
-    * fits coincide.
+  /** Oracle-replayable k-means++ seeding: the min-key point
+    * (`seedFirstK(·, 1)`), then one [[seedNextInverseCdf]] draw per round
+    * r = 2..k at u = [[fixedU]](r). Shared by [[fitBounded]] and
+    * Quality.gapStatisticFitted.
     */
-  def fitBounded(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
-      lloydSteps: Int = 3, fxScale: Double = 1e6,
-      weightScale: Double = 1.0, localMaxCells: Long = 4000000L): FitResult = {
-    // the fitAuto discipline: at sample sizes the ~k·3 seeding jobs plus
-    // the Lloyd scans are pure per-job fixed cost — below the cell
-    // threshold the whole chain runs driver-local with BIT-IDENTICAL
-    // results (pinned in KMeansSpec); past it the distributed chain below
-    // runs unchanged
-    lazy val n = points.count()
-    if (n * dim <= localMaxCells)
-      fitBoundedLocal(points, k, dim, tol, lloydSteps, fxScale, weightScale)
-    else {
-      var seeds = seedFirstK(points, 1)
-      (2 to k).foreach { r =>
-        val (uN, uD) = fixedU(r)
-        val drawn = seedNextInverseCdf(points, seeds, uNum = uN, uDen = uD,
-          weightScale = weightScale).collect()
-        require(drawn.nonEmpty, s"k-means++ draw $r returned no row")
-        seeds = seeds :+ Centroid(drawn.head.getLong(0),
-          drawn.head.getSeq[Double](2))
-      }
-      fitFrom(points, seeds, dim, tol, maxIter = lloydSteps, fxScale = fxScale)
+  private[operators] def seedFixedU(points: DataFrame, k: Int,
+      weightScale: Double = 1.0): Seq[Centroid] =
+    (2 to k).foldLeft(seedFirstK(points, 1)) { (seeds, r) =>
+      val (uN, uD) = fixedU(r)
+      val drawn = seedNextInverseCdf(points, seeds, uNum = uN, uDen = uD,
+        weightScale = weightScale).collect()
+      require(drawn.nonEmpty, s"k-means++ draw $r returned no row")
+      seeds :+ Centroid(drawn.head.getLong(0), drawn.head.getSeq[Double](2))
     }
-  }
 
-  /** Driver-local twin of [[fitBounded]]'s distributed chain — identical
-    * FitResult bit-for-bit (the gapStatisticFitted localW discipline):
-    * ONE key-ordered collect, then the same inverse-CDF draws
-    * (`roundHalfUpLong` ≡ Spark `round`, pinned in PropertySpec; the
-    * cumulative pick walks i order exactly like the windowed prefix sum)
-    * and the same strict-`<` assignment / fixed-point re-average /
-    * j-ordered movement loop as [[fitFrom]].
+  /** Driver-local twin of [[seedFixedU]]: the same anti-join by
+    * coordinates (SQL value equality), the same integer D² weights, and a
+    * cumulative pick that walks key order exactly like the windowed prefix
+    * sum.
     */
-  private def fitBoundedLocal(points: DataFrame, k: Int, dim: Int,
-      tol: Double, lloydSteps: Int, fxScale: Double,
-      weightScale: Double): FitResult = {
-    val rows = points.select(col("i"), col("Y")).orderBy("i").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    require(rows.nonEmpty, "fitBounded on an empty relation")
-    def sqd(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var d = 0
-      while (d < dim) { val t = a(d) - b(d); s += t * t; d += 1 }
-      s
-    }
-    def minSq(y: Array[Double], cs: Seq[Array[Double]]): Double =
-      cs.map(c => sqd(y, c)).min
+  private[operators] def seedFixedULocal(pts: LocalPoints, k: Int,
+      weightScale: Double = 1.0): Seq[Centroid] = {
+    require(pts.ys.nonEmpty, "k-means++ seeding on an empty relation")
     def sameY(a: Array[Double], b: Array[Double]): Boolean =
-      (0 until dim).forall(d => a(d) == b(d)) // SQL value equality
-    var chosen = Vector(rows.head._2)
+      a.length == b.length && a.indices.forall(d => a(d) == b(d))
+    var chosen = Array(pts.ys(0))
     (2 to k).foreach { r =>
       val (uN, uD) = fixedU(r)
-      val surv = rows.filter { case (_, y) => !chosen.exists(c => sameY(c, y)) }
-      val ws = surv.map { case (_, y) =>
-        roundHalfUpLong(minSq(y, chosen) * weightScale) }
+      val surv = pts.ys.filter(y => !chosen.exists(sameY(_, y)))
+      val ws = surv.map(y => roundHalfUpLong(nearestSqLocal(y, chosen) * weightScale))
       val total = ws.sum
       var cw = 0L; var pick = -1; var ix = 0
       while (ix < surv.length && pick < 0) {
@@ -1072,58 +1038,38 @@ object KMeans {
         ix += 1
       }
       require(pick >= 0, s"k-means++ draw $r returned no row")
-      chosen = chosen :+ surv(pick)._2
+      chosen :+= surv(pick)
     }
-    var cs: Seq[Centroid] =
-      chosen.zipWithIndex.map { case (c, ix) => Centroid(ix + 1L, c.toSeq) }
-    var log = cs.map(c => LogEntry(0L, c.j, c.c))
-    // fixed-point coordinates hoisted OUT of the Lloyd loop (r19): the
-    // per-dim roundHalfUpLong(y·fxScale) is invariant across steps, and
-    // roundHalfUpLong allocates a BigDecimal per call — at 150k rows × 64
-    // free-running steps that was ~19M BigDecimal constructions charged to
-    // km_fit_free's timed region. Same values, computed once per cell.
-    val nRows = rows.length
-    val ys = rows.map(_._2)
-    val fys = Array.tabulate(nRows) { ix =>
-      val y = ys(ix)
-      val f = new Array[Long](dim)
-      var d = 0
-      while (d < dim) { f(d) = roundHalfUpLong(y(d) * fxScale); d += 1 }
-      f
-    }
-    var step = 0L
-    var move = Double.MaxValue
-    while (move >= tol && step < lloydSteps) {
-      step += 1
-      val js = cs.map(_.j).toArray
-      val css = cs.map(_.c.toArray).toArray
-      val sums = Array.fill(css.length)(new Array[Long](dim))
-      val cnts = new Array[Long](css.length)
-      var rix = 0
-      while (rix < nRows) {
-        val y = ys(rix)
-        var bi = -1; var bd = Double.PositiveInfinity; var cix = 0
-        while (cix < css.length) {
-          val d2 = sqd(y, css(cix))
-          if (d2 < bd) { bd = d2; bi = cix } // strict <: earliest j wins
-          cix += 1
-        }
-        val s = sums(bi)
-        val f = fys(rix)
-        var d = 0
-        while (d < dim) { s(d) += f(d); d += 1 }
-        cnts(bi) += 1
-        rix += 1
-      }
-      val next = js.indices.filter(cnts(_) > 0).map { ix =>
-        Centroid(js(ix), sums(ix).map(s => s.toDouble / fxScale / cnts(ix)).toSeq)
-      }
-      move = movement(cs, next)
-      cs = next
-      log = log ++ cs.map(c => LogEntry(step, c.j, c.c))
-    }
-    FitResult(cs, log, step, move)
+    chosen.toSeq.zipWithIndex.map { case (c, ix) => Centroid(ix + 1L, c.toSeq) }
   }
+
+  /** Bounded ORACLE-REPLAYABLE fit — the km_gap_fitted discipline as a
+    * standalone entry point: [[seedFixedU]]'s exact inverse-CDF k-means++
+    * seeding, then [[fitFrom]]'s movement-gated Lloyd bounded at
+    * `lloydSteps` iterations. Every stage is ANSI-expressible (anti-join by
+    * coordinates, integer D² weights, windowed cumulative threshold pick,
+    * fixed-point re-averages), so a query built on the returned centroids
+    * can be DuckDB-oracle hash-checked END TO END (`sim_ivf_fitted`).
+    * `weightScale` lifts the D² draw weights into integer range for
+    * small-coordinate data (L2-normalized vectors: 1e6 — at weightScale 1
+    * their sub-4.0 squared distances would round to a handful of integer
+    * ties and degrade the draw).
+    *
+    * Bounding the Lloyd loop at `lloydSteps` movement-gated iterations is
+    * the published cost of hash-exactness (the km_wcr_log contract); on
+    * data where Lloyd converges within the budget the bounded and free
+    * fits coincide. Below [[LocalMaxCells]] the same chain runs through the
+    * driver-local twins ([[seedFixedULocal]], [[fitFromLocal]]) with
+    * bit-identical results (pinned in KMeansSpec).
+    */
+  def fitBounded(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
+      lloydSteps: Int = 3, fxScale: Double = 1e6,
+      weightScale: Double = 1.0, localMaxCells: Long = LocalMaxCells): FitResult =
+    if (points.count() * dim <= localMaxCells) {
+      val pts = collectLocal(points, dim, fxScale)._1
+      fitFromLocal(pts, seedFixedULocal(pts, k, weightScale), tol, lloydSteps)
+    } else fitFrom(points, seedFixedU(points, k, weightScale), dim, tol,
+      maxIter = lloydSteps, fxScale = fxScale)
 
   /** Mini-batch k-means (Sculley 2010, "Web-scale k-means clustering"):
     * each iteration assigns only a deterministic pseudo-random BATCH of
@@ -1141,7 +1087,10 @@ object KMeans {
     * `c ← c + (s − cnt·c) / n_j_total` — one k-sized driver update per
     * step off the SAME single-stage sufficient-stats collect as
     * [[lloydStepOnePass]] (one codegen'd scan of the batch, ≤ P·k partial
-    * rows to the driver, no shuffle).
+    * rows to the driver, no shuffle). Below [[LocalMaxCells]] the batch
+    * statistics come from the driver-local kernel [[localStats]] instead,
+    * with the same LCG draw as its row predicate — bit-identical (pinned
+    * in KMeansSpec).
     *
     * Convergence is monitored with the same [[movement]] metric and `tol`;
     * the log records each step's centroids so the WCR history stays
@@ -1151,80 +1100,27 @@ object KMeans {
     */
   def fitMiniBatch(points: DataFrame, k: Int, dim: Int,
       batchFrac: Double = 0.1, tol: Double = 0.01, maxIter: Int = 20,
-      seed: Long = 42L, localMaxCells: Long = 4000000L): FitResult =
+      seed: Long = 42L, localMaxCells: Long = LocalMaxCells): FitResult =
       withIterConf(points.sparkSession) {
     require(batchFrac > 0 && batchFrac <= 1, s"batchFrac $batchFrac not in (0,1]")
     val mod = 2147483647L
     val cut = (batchFrac * mod).toLong
-    // DRIVER-LOCAL TWIN under `localMaxCells` (r19, the fitBounded gate
-    // verbatim): each distributed iteration is one sufficient-stats job —
-    // 20 steps × (fresh batch-filter plan + job dispatch) profiled as
-    // ~2 s of fixed cost for microseconds of argmin/sum work at sample
-    // sizes. Below the bound the points are collected ONCE and every step
-    // replays the exact distributed arithmetic: the LCG batch draw (same
-    // int64 `(i·a + c) % m < cut`), the strict-< (d, j) argmin
-    // [[fitBoundedLocal]] already pins, the per-dim `round(v·1e6)` fixed-
-    // point sums ([[roundHalfUpLong]] ≡ Spark round, PropertySpec), and
-    // the same driver-side learning-rate fold below — so the FitResult is
-    // bit-identical (KMeansSpec pins local ≡ distributed). Past the bound
-    // the distributed loop runs unchanged.
-    lazy val nRows = points.count()
-    val localRows: Option[Array[(Long, Array[Double])]] =
-      if (localMaxCells > 0 && nRows * dim <= localMaxCells)
-        Some(points.select(col("i"), col("Y")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)))
+    def salt(step: Long): Long = 12345L + seed + step
+    val local =
+      if (points.count() * dim <= localMaxCells) Some(collectLocal(points, dim, 1e6)._1)
       else None
-    def localStats(rows: Array[(Long, Array[Double])], step: Long,
-        cs: Seq[Centroid]): scala.collection.mutable.LongMap[(Array[Long], Long)] = {
-      val js = cs.map(_.j).toArray
-      val css = cs.map(_.c.toArray).toArray
-      val acc = scala.collection.mutable.LongMap.empty[(Array[Long], Long)]
-      val salt = 12345L + seed + step
-      var rix = 0
-      while (rix < rows.length) {
-        val (i, y) = rows(rix)
-        if ((i * 1103515245L + salt) % mod < cut) {
-          var bi = -1; var bd = Double.PositiveInfinity; var cix = 0
-          while (cix < css.length) {
-            var s = 0.0; var d = 0
-            val c = css(cix)
-            val n = math.min(c.length, y.length)
-            while (d < n) { val t = c(d) - y(d); s += t * t; d += 1 }
-            if (s < bd) { bd = s; bi = cix } // strict <: earliest j wins
-            cix += 1
-          }
-          val cur = acc.getOrElse(js(bi), (new Array[Long](dim), 0L))
-          val sums = cur._1
-          var d = 0
-          while (d < dim) { sums(d) += roundHalfUpLong(y(d) * 1e6); d += 1 }
-          acc.update(js(bi), (sums, cur._2 + 1))
-        }
-        rix += 1
-      }
-      acc
+    val batchStats: (Long, Seq[Centroid]) => Stats = local match {
+      case Some(pts) => (step, cs) =>
+        localStats(pts, cs, ix => (pts.ids(ix) * 1103515245L + salt(step)) % mod < cut)
+      case None => (step, cs) =>
+        onePassStats(points.filter(
+          (col("i") * 1103515245L + lit(salt(step))) % mod < cut), cs, dim, fxScale = 1e6)
     }
-    var cs = localRows match {
-      case Some(rows) => // seedFirstK: k smallest keys, j = 1..k in key order
-        rows.sortBy(_._1).take(k).zipWithIndex.map { case ((_, y), ix) =>
-          Centroid(ix + 1L, y.toSeq)
-        }.toSeq
-      case None => seedFirstK(points, k)
-    }
-    var log = cs.map(c => LogEntry(0L, c.j, c.c))
     val absorbed = scala.collection.mutable.Map.empty[Long, Long]
       .withDefaultValue(0L)
-    var step = 0L
-    var move = Double.MaxValue
-    while (move >= tol && step < maxIter) {
-      step += 1
-      val stats = localRows match {
-        case Some(rows) => localStats(rows, step, cs)
-        case None =>
-          val batch = points.filter(
-            (col("i") * 1103515245L + lit(12345L + seed + step)) % mod < cut)
-          onePassStats(batch, cs, dim, fxScale = 1e6)
-      }
-      val next = cs.map { c =>
+    lloyd(local.fold(seedFirstK(points, k))(firstKLocal(_, k)), tol, maxIter) { (step, cs) =>
+      val stats = batchStats(step, cs)
+      cs.map { c =>
         stats.get(c.j) match {
           case Some((sums, cnt)) =>
             val n = absorbed(c.j) + cnt
@@ -1236,11 +1132,7 @@ object KMeans {
           case None => c // centroid untouched by this batch
         }
       }
-      move = movement(cs, next)
-      cs = next
-      log = log ++ cs.map(c => LogEntry(step, c.j, c.c))
     }
-    FitResult(cs, log, step, move)
   }
 
   private def fitInner(points: DataFrame, k: Int, dim: Int, tol: Double,
@@ -1254,33 +1146,45 @@ object KMeans {
   }
 
   private def iterate(points: DataFrame, init: Seq[Centroid], dim: Int,
-      tol: Double, maxIter: Int, fxScale: Double, startStep: Long): FitResult = {
-    var cs = init
-    // a resumed run's starting centroids were already logged (at startStep)
-    // by the run that produced them — only a fresh fit logs its seeds
-    var log = if (startStep == 0L) cs.map(c => LogEntry(0L, c.j, c.c)) else Nil
-    var step = startStep
-    var move = Double.MaxValue
-    while (move >= tol && step < startStep + maxIter) {
-      step += 1
+      tol: Double, maxIter: Int, fxScale: Double, startStep: Long): FitResult =
+    lloyd(init, tol, maxIter, startStep) { (_, cs) =>
       // Plan-shape choice, measured: with small centroid sets, literals are
       // cheapest (planning is ~10 ms; the broadcast exchange of the const
       // plan costs more than it saves). Past ~4k embedded literals the
       // analysis/codegen of the literal tree takes over — ship centroids as
       // broadcast data instead. Both paths are value-identical.
-      val next =
-        if (fxScale > 0) {
-          if (cs.size.toLong * dim > 4096) lloydStepConst(points, cs, dim, fxScale)
-          else lloydStepOnePass(points, cs, dim, fxScale)
-        } else lloydStep(assign(points, cs), dim, fxScale)
+      if (fxScale <= 0) lloydStep(assign(points, cs), dim, fxScale)
+      else if (cs.size.toLong * dim > 4096) lloydStepConst(points, cs, dim, fxScale)
+      else lloydStepOnePass(points, cs, dim, fxScale)
+    }
+
+  /** THE Lloyd driver loop (reference k-means.sh:16-33, k-means.sql:42-56):
+    * `step(n, cs)` maps step number n and the current centroids to the
+    * next set; this loop owns the step counter, the stop rule (movement <
+    * `tol` or `maxIter` steps), the emptied-cluster warning and the WCR
+    * log. Steps are numbered from `startStep`; a resumed run's starting
+    * centroids were already logged by the run that produced them, so only
+    * a fresh fit (`startStep = 0`) logs its seeds.
+    */
+  private def lloyd(init: Seq[Centroid], tol: Double, maxIter: Int,
+      startStep: Long = 0L)(step: (Long, Seq[Centroid]) => Seq[Centroid]): FitResult = {
+    var cs = init
+    val log = Vector.newBuilder[LogEntry]
+    def record(n: Long): Unit = log ++= cs.map(c => LogEntry(n, c.j, c.c))
+    if (startStep == 0L) record(0L)
+    var n = startStep
+    var move = Double.MaxValue
+    while (move >= tol && n < startStep + maxIter) {
+      n += 1
+      val next = step(n, cs)
       if (next.size < cs.size)
         logger.warn(
-          s"kmeans: ${cs.size - next.size} cluster(s) emptied at step $step (reference drop semantics)")
+          s"kmeans: ${cs.size - next.size} cluster(s) emptied at step $n (reference drop semantics)")
       move = movement(cs, next)
       cs = next
-      log = log ++ cs.map(c => LogEntry(step, c.j, c.c))
+      record(n)
     }
-    FitResult(cs, log, step, move)
+    FitResult(cs, log.result(), n, move)
   }
 
   // ------------------------------------------------------- model persistence

@@ -439,11 +439,9 @@ object Quality {
     * the non-replayable fit internals with deterministic machinery the
     * oracle can unroll, keep the fit real):
     *  - seeding per set is NESTED exact inverse-CDF k-means++
-    *    ([[KMeans.seedNextInverseCdf]], the reference's `centroidsInit`
-    *    machinery): first centroid = min-key point, then `ks.max − 1`
-    *    D²-weighted draws with FIXED RATIONAL u's (integer-domain threshold
-    *    compare — bit-reproducible in ANSI SQL); the k-fit starts from the
-    *    first k seeds, so seeding cost is shared across the sweep;
+    *    ([[KMeans.seedFixedU]], the reference's `centroidsInit` machinery
+    *    with fixed rational u's): `ks.max` seeds once, and the k-fit starts
+    *    from the first k, so seeding cost is shared across the sweep;
     *  - each (set, k) fit is `fitFrom`'s movement-gated Lloyd loop bounded
     *    at `lloydSteps` iterations (fixed-point 1e4 re-averages, tol-gated
     *    stop — exactly the km_wcr_log unrolled-CTE contract);
@@ -460,35 +458,20 @@ object Quality {
     * (no single-partition window at scale) and each Lloyd step is the
     * one-pass sufficient-stats scan; the `refSets + 1` set chains are
     * independent and run concurrently (the [[gapStatistic]] pool rule).
-    * Below `localMaxRows` the whole chain instead runs DRIVER-LOCAL with
-    * bit-identical results (the fitAuto discipline, pinned in QualitySpec):
-    * at sample sizes the distributed form is ~130 tiny jobs of pure fixed
-    * cost, while past the threshold the distributed chain takes over
-    * unchanged.
+    * When `rows·dim ≤ localMaxCells` the same chain runs through the
+    * KMeans driver-local twins ([[KMeans.seedFixedULocal]],
+    * [[KMeans.fitFromLocal]]) with bit-identical results (pinned in
+    * QualitySpec): at sample sizes the distributed form is ~130 tiny jobs
+    * of pure fixed cost.
     */
   def gapStatisticFitted(points: DataFrame, dim: Int, ks: Seq[Int],
       refSets: Int = 3, scale: Double = 0.01, tol: Double = 0.01,
       lloydSteps: Int = 3, fxScale: Double = 1e4,
-      localMaxRows: Long = -1L): DataFrame = {
-    // localMaxRows = -1 (default) → derive from the fitBounded CELL budget
-    // (r19): the collected thing is rows × dim doubles, so the row bound
-    // should scale with 1/dim, not sit at a constant — the old 100k-row
-    // default left the sf0.1 2-D orders binding (150k rows, 300k cells) on
-    // the ~130-job distributed path this local twin exists to avoid, for
-    // the sake of a bound meant to protect against 64-D collects.
-    // localMaxRows = 0 still forces the distributed chain (the QualitySpec
-    // parity seam); an explicit positive bound is honored as before.
-    val localRowBound =
-      if (localMaxRows >= 0) localMaxRows
-      else 4000000L / math.max(dim, 1)
+      localMaxCells: Long = KMeans.LocalMaxCells): DataFrame = {
     require(ks.nonEmpty && ks == ks.sorted, "need ascending ks")
     val spark = points.sparkSession
     import spark.implicits._
     val kMax = ks.max
-    // fixed rational draws for rounds 2..kMax — the shared KMeans.FixedUs
-    // sequence (also fitBounded's), so every bounded-replayable fit and its
-    // oracle agree on one u schedule
-    def uOf(r: Int): (Long, Long) = KMeans.fixedU(r)
     val boxAggs = (0 until dim).flatMap { d =>
       Seq(min(element_at(col("Y"), d + 1)).as(s"lo_$d"),
         max(element_at(col("Y"), d + 1)).as(s"hi_$d"))
@@ -502,94 +485,28 @@ object Quality {
         ((col("i") * gapLcgA(b, dim, d) + lcgC(b, d)) % GapLcgM).cast("double") /
           GapLcgM.toDouble * (hi(d) - lo(d)) + lo(d)
       }: _*).as("Y"))
-    val sets: Seq[DataFrame] = points +: (0 until refSets).map(refDf)
 
-    // ------------------------------------------------- driver-local fast path
-    // The fitAuto discipline: below `localMaxRows` the whole
-    // seed→fit→census chain runs driver-local with BIT-IDENTICAL results
-    // (pinned in QualitySpec) — the distributed form's ~130 tiny jobs are
-    // pure fixed cost at sample sizes, while at real scale the distributed
-    // chain below takes over unchanged. Every rounding uses BigDecimal
-    // HALF_UP (Spark's `round`), every float fold walks the same order.
+    // driver-local: the same reference sets computed from the collected
+    // ids, one set held at a time
     def localW(): Seq[Seq[Double]] = {
-      val base = points.select(col("i"), col("Y")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-      // KMeans.roundHalfUpLong ≡ the BigDecimal HALF_UP form (PropertySpec
-      // pin) — the old per-call BigDecimal here ran millions of times per
-      // sweep (every point, every Lloyd step, every set) and dominated the
-      // local path's wall (r19)
-      def rnd(x: Double): Long = KMeans.roundHalfUpLong(x)
-      def sqd(a: Array[Double], b: Array[Double]): Double = {
-        var s = 0.0; var d = 0
-        while (d < dim) { val t = a(d) - b(d); s += t * t; d += 1 }
-        s
-      }
-      def minSq(y: Array[Double], cs: Seq[Array[Double]]): Double =
-        cs.map(c => sqd(y, c)).min
-      def sameY(a: Array[Double], b: Array[Double]): Boolean =
-        (0 until dim).forall(d => a(d) == b(d)) // SQL value equality
-      def refCoords(b: Int): Array[(Long, Array[Double])] =
-        base.map { case (i, _) =>
-          (i, Array.tabulate(dim) { d =>
+      val base = KMeans.collectLocal(points, dim, fxScale)._1
+      def refPoints(b: Int): KMeans.LocalPoints =
+        new KMeans.LocalPoints(base.ids, base.ids.map { i =>
+          Array.tabulate(dim) { d =>
             ((i * gapLcgA(b, dim, d) + lcgC(b, d)) % GapLcgM).toDouble /
               GapLcgM.toDouble * (hi(d) - lo(d)) + lo(d)
-          })
-        }
-      def wOfSetLocal(pts: Array[(Long, Array[Double])]): Seq[Double] = {
-        // nested ++ seeds: min-key first, then rational inverse-CDF draws
-        var chosen = Vector(pts.head._2)
-        (2 to kMax).foreach { r =>
-          val (uN, uD) = uOf(r)
-          val surv = pts.filter { case (_, y) =>
-            !chosen.exists(c => sameY(c, y)) }
-          val ws = surv.map { case (_, y) => rnd(minSq(y, chosen)) }
-          val total = ws.sum
-          var cw = 0L; var pick = -1; var ix = 0
-          while (ix < surv.length && pick < 0) {
-            cw += ws(ix)
-            if (cw * uD >= total * uN) pick = ix
-            ix += 1
           }
-          require(pick >= 0, s"k-means++ draw $r returned no row")
-          chosen = chosen :+ surv(pick)._2
-        }
-        // per k: movement-gated Lloyd (fixed-point re-averages), then the
-        // fixed-point dispersion census
+        }, dim, fxScale)
+      def wOfSetLocal(pts: KMeans.LocalPoints): Seq[Double] = {
+        val seeds = KMeans.seedFixedULocal(pts, kMax)
         ks.map { k =>
-          var cs: Seq[(Long, Array[Double])] =
-            (1 to k).map(j => (j.toLong, chosen(j - 1)))
-          var move = Double.MaxValue
-          var step = 0
-          while (move >= tol && step < lloydSteps) {
-            step += 1
-            val acc = scala.collection.mutable.LongMap
-              .empty[(Array[Long], Long)]
-            pts.foreach { case (_, y) =>
-              var bj = -1L; var bd = Double.PositiveInfinity
-              cs.foreach { case (j, c) =>
-                val d2 = sqd(y, c)
-                if (d2 < bd) { bd = d2; bj = j } // strict <: earliest j wins
-              }
-              val cur = acc.getOrElse(bj, (new Array[Long](dim), 0L))
-              var d = 0
-              while (d < dim) { cur._1(d) += rnd(y(d) * fxScale); d += 1 }
-              acc.update(bj, (cur._1, cur._2 + 1))
-            }
-            val next = acc.toSeq.sortBy(_._1).map { case (j, (sums, n)) =>
-              (j, sums.map(s => s.toDouble / fxScale / n))
-            }
-            val byJ = cs.map { case (j, c) => j -> c }.toMap
-            move = next.flatMap { case (j, c) =>
-              byJ.get(j).map(p => math.sqrt(sqd(p, c)))
-            }.sum
-            cs = next
-          }
-          val cents = cs.map(_._2)
-          pts.map { case (_, y) => rnd(minSq(y, cents) * scale) }
+          val cents = KMeans.fitFromLocal(pts, seeds.take(k), tol, lloydSteps)
+            .centroids.map(_.c.toArray).toArray
+          pts.ys.map(y => KMeans.roundHalfUpLong(KMeans.nearestSqLocal(y, cents) * scale))
             .sum.toDouble / scale
         }
       }
-      (base +: (0 until refSets).map(refCoords)).map(wOfSetLocal)
+      wOfSetLocal(base) +: (0 until refSets).map(b => wOfSetLocal(refPoints(b)))
     }
 
     // per set: nested ++ seeds, one bounded fit per k, ONE multi-agg
@@ -597,28 +514,20 @@ object Quality {
     def wOfSet(df0: DataFrame): Seq[Double] = {
       val df = df0.cache()
       try {
-        var seeds = KMeans.seedFirstK(df, 1)
-        (2 to kMax).foreach { r =>
-          val (uN, uD) = uOf(r)
-          val drawn = KMeans.seedNextInverseCdf(df, seeds,
-            uNum = uN, uDen = uD).collect()
-          require(drawn.nonEmpty, s"k-means++ draw $r returned no row")
-          seeds = seeds :+ Centroid(drawn.head.getLong(0),
-            drawn.head.getSeq[Double](2))
-        }
-        val fitted = ks.map(k => KMeans.fitFrom(df, seeds.take(k), dim,
-          tol = tol, maxIter = lloydSteps, fxScale = fxScale).centroids)
-        val aggs = ks.zip(fitted).map { case (k, cs) =>
-          sumFx(graft.plans.native.nearest_sq_dist(
-            col("Y"), cs.map(_.c)), scale).as(s"w_$k")
+        val seeds = KMeans.seedFixedU(df, kMax)
+        val aggs = ks.map { k =>
+          val cs = KMeans.fitFrom(df, seeds.take(k), dim, tol = tol,
+            maxIter = lloydSteps, fxScale = fxScale).centroids
+          sumFx(graft.plans.native.nearest_sq_dist(col("Y"), cs.map(_.c)), scale).as(s"w_$k")
         }
         val row = df.agg(aggs.head, aggs.tail: _*).head()
         ks.indices.map(ix => row.getDouble(ix))
       } finally df.unpersist()
     }
     val ws: Seq[Seq[Double]] =
-      if (points.count() <= localRowBound) localW()
+      if (points.count() * dim <= localMaxCells) localW()
       else {
+        val sets = points +: (0 until refSets).map(refDf)
         val pool = java.util.concurrent.Executors.newFixedThreadPool(sets.size)
         try {
           implicit val ec: scala.concurrent.ExecutionContext =

@@ -165,15 +165,15 @@ class KMeansSpec extends SparkSpec {
     assert(draw(dedup = true) == 4L)
   }
 
-  test("lloydStepConst (broadcast-data plan) is bit-identical to lloydStepFast") {
+  test("lloydStepConst (broadcast-data plan) is bit-identical to lloydStep") {
     // pins the plan-shape switch fit() makes past 4096 embedded literals,
     // which no small-k spec reaches organically
     val data = Tables.yhEmbeddings(spark, sf("0.001")).cache()
     val cs = KMeans.seedFirstK(data, 7)
-    val fast = KMeans.lloydStepFast(KMeans.assign(data, cs), dim = 64, fxScale = 1e6)
+    val ref = KMeans.lloydStep(KMeans.assign(data, cs), dim = 64, fxScale = 1e6)
     val const = KMeans.lloydStepConst(data, cs, dim = 64, fxScale = 1e6)
-    assert(fast.map(_.j) == const.map(_.j))
-    fast.zip(const).foreach { case (a, b) =>
+    assert(ref.map(_.j) == const.map(_.j))
+    ref.zip(const).foreach { case (a, b) =>
       a.c.zip(b.c).foreach { case (x, y) =>
         assert(java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(y))
       }
@@ -200,16 +200,16 @@ class KMeansSpec extends SparkSpec {
     assert(KMeans.movementRefLimit2ByStep(single) == 5.0)
   }
 
-  test("lloydStepOnePass (single-stage driver merge) is bit-identical to lloydStepFast") {
+  test("lloydStepOnePass (single-stage driver merge) is bit-identical to lloydStep") {
     // pins the fit loop's default step: the one-stage sufficient-stats
     // collect must produce the same longs (and so the same doubles) as the
     // declarative shuffle form, in any partitioning
     val data = Tables.yhEmbeddings(spark, sf("0.001")).repartition(5).cache()
     val cs = KMeans.seedFirstK(data, 7)
-    val fast = KMeans.lloydStepFast(KMeans.assign(data, cs), dim = 64, fxScale = 1e6)
+    val ref = KMeans.lloydStep(KMeans.assign(data, cs), dim = 64, fxScale = 1e6)
     val one = KMeans.lloydStepOnePass(data, cs, dim = 64, fxScale = 1e6)
-    assert(fast.map(_.j) == one.map(_.j))
-    fast.zip(one).foreach { case (a, b) =>
+    assert(ref.map(_.j) == one.map(_.j))
+    ref.zip(one).foreach { case (a, b) =>
       a.c.zip(b.c).foreach { case (x, y) =>
         assert(java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(y))
       }
@@ -381,19 +381,6 @@ class KMeansSpec extends SparkSpec {
     assert(sizes.forall(s => s > 400 && s < 600), s"sizes: ${sizes.toSeq}")
   }
 
-  test("lloydStepFast (single vector_sum_long aggregate) is bit-identical to lloydStep") {
-    val data = Tables.yhEmbeddings(spark, sf("0.001")).cache()
-    val assigned = KMeans.assign(data, KMeans.seedFirstK(data, 7))
-    val slow = KMeans.lloydStep(assigned, dim = 64, fxScale = 1e6)
-    val fast = KMeans.lloydStepFast(assigned, dim = 64, fxScale = 1e6)
-    assert(slow.map(_.j) == fast.map(_.j))
-    slow.zip(fast).foreach { case (a, b) =>
-      a.c.zip(b.c).foreach { case (x, y) =>
-        assert(java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(y))
-      }
-    }
-  }
-
   test("property: WCSS is non-increasing across Lloyd iterations") {
     val data = Tables.yhEmbeddings(spark, sf("0.001")).cache()
     var cs = KMeans.seedFirstK(data, 5)
@@ -431,6 +418,26 @@ class KMeansSpec extends SparkSpec {
       batchFrac = 0.2, maxIter = 20, seed = 42, localMaxCells = 0L)
     assert(dist.centroids == mb.centroids && dist.steps == mb.steps &&
       dist.finalMovement == mb.finalMovement && dist.log == mb.log)
+  }
+
+  test("local twins drop an emptied cluster and break ties exactly like the distributed loops") {
+    // keys 1 and 2 share Y, so seedFirstK seeds two equal centroids: every
+    // row ties between them, the earlier j wins, and j = 2 empties at step 1
+    def logBits(r: KMeans.FitResult): Seq[(Long, Long, Seq[Long])] =
+      r.log.map(e => (e.step, e.j, e.c.map(java.lang.Double.doubleToLongBits)))
+    val data = pts((1L to 40L).map(i =>
+      i -> (if (i <= 2L) Seq(0.0, 0.0) else Seq((i % 5).toDouble, (i % 7) * 3.0))): _*).cache()
+    val local = KMeans.fitAuto(data, k = 3, dim = 2)
+    val dist = KMeans.fitAuto(data, k = 3, dim = 2, localMaxCells = 1)
+    assert(local.log.filter(_.step == 1).map(_.j) == Seq(1L, 3L))
+    assert(logBits(local) == logBits(dist))
+    assert(local.steps == dist.steps && local.finalMovement == dist.finalMovement)
+
+    val mbLocal = KMeans.fitMiniBatch(data, k = 3, dim = 2, batchFrac = 0.5, seed = 7)
+    val mbDist = KMeans.fitMiniBatch(data, k = 3, dim = 2, batchFrac = 0.5, seed = 7,
+      localMaxCells = 0L)
+    assert(logBits(mbLocal) == logBits(mbDist))
+    assert(mbLocal.steps == mbDist.steps && mbLocal.finalMovement == mbDist.finalMovement)
   }
 
   test("fit quality matches MLlib KMeans (WCSS cross-check)") {

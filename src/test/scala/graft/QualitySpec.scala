@@ -168,7 +168,7 @@ class QualitySpec extends SparkSpec {
   }
 
   test("gapStatisticFitted: driver-local fast path is bit-identical to the distributed chain") {
-    // the fitAuto discipline pin: localMaxRows = 0 forces every stage
+    // the fitAuto discipline pin: localMaxCells = 0 forces every stage
     // (++ draws, movement-gated Lloyd, dispersion census) through the
     // distributed plan; the default runs the same arithmetic driver-local.
     // Exact integer equality of the full output is the contract.
@@ -176,7 +176,7 @@ class QualitySpec extends SparkSpec {
     val local = Quality.gapStatisticFitted(yh, dim = 2, ks = 2 to 6)
       .as[(Long, Long, Long, Long)].collect().toSeq
     val dist = Quality.gapStatisticFitted(yh, dim = 2, ks = 2 to 6,
-      localMaxRows = 0L).as[(Long, Long, Long, Long)].collect().toSeq
+      localMaxCells = 0L).as[(Long, Long, Long, Long)].collect().toSeq
     assert(local == dist, s"local=$local dist=$dist")
   }
 
