@@ -1717,7 +1717,7 @@ object SparkEntry {
       val cells = emb
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         .select(col("vec_id"),
-          nearestId(col("v"), cents.map(_.j), cents.map(_.c)).as("cell"))
+          plans.native.nearestIdNative(col("v"), cents.map(_.j), cents.map(_.c)).as("cell"))
       val docs = Tables.read(s, dir, "documents").select(col("doc_id"),
         col("lang"), size(Dedup.tokens(col("text"))).cast("long").as("n_tok"))
       val j = cells.join(docs, cells("vec_id") === docs("doc_id"))

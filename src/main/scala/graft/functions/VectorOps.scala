@@ -4,10 +4,16 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Vector math as Catalyst-native higher-order-function `Column`s — no Scala
-  * UDF closures anywhere, so whole-stage codegen is never broken. This is the
-  * Spark analog of the reference's decision to stay engine-native
-  * (reference README.md:16 argues against Python UDFs; k-means.sql:24,38 use
-  * `L2Distance` + `arraySort` lambdas).
+  * UDF closures. This is the Spark analog of the reference's decision to stay
+  * engine-native (reference README.md:16 argues against Python UDFs;
+  * k-means.sql:24,38 use `L2Distance` + `arraySort` lambdas).
+  *
+  * The HOFs (`zip_with`, `aggregate`, `transform`) are `CodegenFallback`:
+  * an operator holding one drops out of whole-stage codegen and evaluates
+  * them interpreted, per row, allocating per element. These forms are the
+  * readable references that specs pin the `graft.plans` kernels against
+  * (`native.sq_dist`, `native.dot`, `native.nearestIdNative`,
+  * `native.nearest_sq_dist`); hot paths call the kernels.
   *
   * Fold order is fixed left-to-right `(((0+d0)+d1)+…)` so results are
   * bit-identical to a sequential evaluation of the same IEEE-double formula —

@@ -18,8 +18,9 @@ import graft.functions.VectorOps._
   *  - Centroid state is k·dim doubles held on the DRIVER and shipped to
   *    executors as literals — the analog of the reference's scalar-subquery
   *    broadcast of `(groupArray(j), groupArray(C))` (k-means.sql:36). No
-  *    join, no shuffle for assignment; O(k·dim) per row inside whole-stage
-  *    codegen.
+  *    join, no shuffle for assignment; the O(k·dim) argmin per row is one
+  *    call of the [[graft.plans.NearestCentroid]] kernel from whole-stage
+  *    generated code, over centroids flattened once per task.
   *  - Each Lloyd step is ONE shuffle: partial (map-side) per-dimension sums +
   *    counts, final merge of k·dim values. Spark's partial/final aggregation
   *    is the property that made the reference shard-friendly (README.md:15).
@@ -214,9 +215,10 @@ object KMeans {
     val spark = points.sparkSession
     import spark.implicits._
     // centroids as broadcast DATA (constant plan across rounds — see
-    // lloydStepConst); the native kernel is bit-identical to the HOF form,
-    // and the broadcast join preserves row order, so rand(seed) draws the
-    // same per-row values as a plain projection would
+    // lloydStepConst); the native kernel is bit-identical to the
+    // VectorOps.nearestSqDist fold, and the broadcast join preserves row
+    // order, so rand(seed) draws the same per-row values as a plain
+    // projection would
     val csDf = Seq(Tuple1(coords(chosen))).toDF("ccs")
     val w = graft.plans.native.nearestSqDistCols(col("Y"), col("ccs"))
     val key = when(w > 0, pow(rand(seed), lit(1.0) / w)).otherwise(lit(-1.0))
@@ -275,8 +277,7 @@ object KMeans {
     for (r <- 1 to rounds) {
       // candidates ride as broadcast DATA through the native kernel (the
       // lloydStepConst trick): constant plan text across rounds even as the
-      // candidate set grows, and the distance fold stays codegen'd instead
-      // of falling back to the interpreted literal HOF.
+      // candidate set grows.
       val csDf = Seq(Tuple1(cands.map(_.toSeq))).toDF("ccs")
       val d2 = graft.plans.native.nearestSqDistCols(col("Y"), col("ccs"))
       // fixed-point integer sum: ϕ is identical under ANY partitioning /
@@ -371,8 +372,9 @@ object KMeans {
 
   /** Reference `nearestCentroid` view (k-means.sql:35-39): adds column `j` =
     * id of nearest centroid. Centroids travel as literals (broadcast-in-plan);
-    * zero shuffle, argmin fold with the native `sq_dist` kernel (bit-identical
-    * to the pure-HOF form — see PlansSpec).
+    * zero shuffle. The argmin is [[graft.plans.NearestCentroid]], called once
+    * per row from the projection's whole-stage generated code (bit-identical
+    * to the `VectorOps.nearestId` HOF fold — see PlansSpec).
     */
   def assign(points: DataFrame, cs: Seq[Centroid]): DataFrame =
     points.withColumn("j",
@@ -443,23 +445,25 @@ object KMeans {
   /** The single-stage sufficient-statistics collect behind
     * [[lloydStepOnePass]] (and [[fitMiniBatch]]'s per-batch stats):
     * assignment + fixed-point per-partition (Σfx, n) accumulators in one
-    * codegen'd scan, ≤ P·k partial rows merged on the driver.
+    * codegen'd scan, ≤ P·k partial rows merged on the driver. The
+    * fixed-point values are `roundHalfUpLong(y·fxScale)` inside the
+    * accumulator loop — the rounding [[LocalPoints]] uses, ≡ Spark
+    * `round(y·fxScale)::long`.
     */
   private def onePassStats(points: DataFrame, cs: Seq[Centroid], dim: Int,
       fxScale: Double): Stats = {
-    val fx = transform(col("Y"), v => round(v * fxScale).cast("long"))
-    val proj = assign(points, cs).select(col("j"), fx.as("yfx"))
+    val proj = assign(points, cs).select(col("j"), col("Y"))
     val d = dim
     val partials = proj.queryExecution.toRdd.mapPartitions { it =>
       val acc = scala.collection.mutable.LongMap.empty[(Array[Long], Long)]
       while (it.hasNext) {
         val row = it.next()
         val j = row.getLong(0)
-        val v = row.getArray(1)
+        val y = row.getArray(1)
         val cur = acc.getOrElse(j, (new Array[Long](d), 0L))
         val sums = cur._1
         var x = 0
-        while (x < d) { sums(x) += v.getLong(x); x += 1 }
+        while (x < d) { sums(x) += roundHalfUpLong(y.getDouble(x) * fxScale); x += 1 }
         acc.update(j, (sums, cur._2 + 1))
       }
       acc.iterator.map { case (j, (sums, n)) => (j, sums, n) }
@@ -805,7 +809,9 @@ object KMeans {
     s
   }
 
-  /** `nearest_sq_dist`'s fold: strict-`<` minimum from `Double.MaxValue`. */
+  /** [[graft.plans.NearestCentroid]]'s distance fold: strict-`<` minimum
+    * from `Double.MaxValue`.
+    */
   private[operators] def nearestSqLocal(y: Array[Double],
       css: Array[Array[Double]]): Double = {
     var m = Double.MaxValue; var j = 0
@@ -813,8 +819,9 @@ object KMeans {
     m
   }
 
-  /** `nearestIdCols`' fold: strict `<` from `Double.MaxValue`, so the
-    * earliest centroid wins a tie. Returns the position in `css`.
+  /** [[graft.plans.NearestCentroid]]'s argmin fold: strict `<` from
+    * `Double.MaxValue`, so the earliest centroid wins a tie. Returns the
+    * position in `css`.
     */
   private def nearestIx(y: Array[Double], css: Array[Array[Double]]): Int = {
     var bi = -1; var bd = Double.MaxValue; var j = 0

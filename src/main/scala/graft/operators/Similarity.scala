@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps._
+import graft.plans.native
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -74,7 +75,6 @@ object Similarity {
 
   /** The shared candidate-scoring stage of the brute-force rankings. */
   private def bruteForceScored(emb: DataFrame, nQueries: Int): DataFrame = {
-    import graft.plans.native
     val e = emb2v(emb).withColumn("nv", sqrt(native.dot(col("v"), col("v"))))
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nv").as("qn"))
@@ -249,7 +249,7 @@ object Similarity {
     val cs = centroids.map(_.c)
     val coded = binaryCodes(emb)
       .join(e.select(col("vec_id"),
-        nearestId(col("v"), ids, cs).as("cell")), "vec_id")
+        native.nearestIdNative(col("v"), ids, cs).as("cell")), "vec_id")
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val cellDists = q.select(col("q_id"),
@@ -278,7 +278,6 @@ object Similarity {
     */
   private def binaryRerank(ham: DataFrame, emb: DataFrame, nQueries: Int,
       k: Int, rerankN: Int): DataFrame = {
-    import graft.plans.native
     val e = emb2v(emb)
     val wh = Window.partitionBy("q_id").orderBy(asc("hamming"), col("n_id"))
     val short = ham.withColumn("hr", row_number().over(wh))
@@ -320,7 +319,6 @@ object Similarity {
     */
   def matryoshkaRecall(emb: DataFrame, dims: Seq[Int] = Seq(8, 16, 32, 64),
       nQueries: Int = 5, k: Int = 10): DataFrame = {
-    import graft.plans.native
     val full = dims.max
     val e = emb2v(emb)
     val q = e.filter(col("vec_id") < nQueries)
@@ -412,12 +410,11 @@ object Similarity {
   def ivfRecallCurve(emb: DataFrame, centroids: Seq[KMeans.Centroid],
       nQueries: Int = 5, probeLevels: Seq[Int] = Seq(1, 2, 4, 8),
       k: Int = 10): DataFrame = {
-    import graft.plans.native
     val ids = centroids.map(_.j)
     val cs = centroids.map(_.c)
     val maxProbe = probeLevels.max
     val e = emb2v(emb)
-    val cells = e.withColumn("cell", nearestId(col("v"), ids, cs))
+    val cells = e.withColumn("cell", native.nearestIdNative(col("v"), ids, cs))
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val cellDists = q.select(col("q_id"), col("qv"),
@@ -472,7 +469,7 @@ object Similarity {
       nQueries: Int = 5, nProbe: Int = 2, minCosE6: Long = 250000L): DataFrame = {
     val e = emb2v(emb)
     val cells = e.withColumn("cell",
-      nearestId(col("v"), centroids.map(_.j), centroids.map(_.c)))
+      native.nearestIdNative(col("v"), centroids.map(_.j), centroids.map(_.c)))
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     rangeCut(
@@ -512,7 +509,7 @@ object Similarity {
     // byte-starved scan serializes both. Identity at real scale, where the
     // assignment stays the zero-extra-shuffle scan-stage fold.
     val cells = Par.widenBy(e, col("vec_id"))
-      .withColumn("cell", nearestId(col("v"), centroids.map(_.j), centroids.map(_.c)))
+      .withColumn("cell", native.nearestIdNative(col("v"), centroids.map(_.j), centroids.map(_.c)))
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     ivfSearch(cells, q, centroids.map(_.j), centroids.map(_.c), nProbe, k)
@@ -535,7 +532,7 @@ object Similarity {
   def cellBalance(emb: DataFrame, centroids: Seq[KMeans.Centroid]): DataFrame = {
     val n = centroids.size
     val cells = emb2v(emb).withColumn("cell",
-      nearestId(col("v"), centroids.map(_.j), centroids.map(_.c)))
+      native.nearestIdNative(col("v"), centroids.map(_.j), centroids.map(_.c)))
     // ONE corpus scan: the total folds from the |cells|-row rollup itself
     // (the oracle's sum(n_vecs) OVER ()), which persists for its two
     // consumers — never a second pass over the vectors
@@ -613,7 +610,7 @@ object Similarity {
   def buildIvfIndex(emb: DataFrame, centroids: Seq[KMeans.Centroid],
       table: String, buckets: Int = 8, path: Option[String] = None): Unit = {
     val cells = emb2v(emb).withColumn("cell",
-      nearestId(col("v"), centroids.map(_.j), centroids.map(_.c)))
+      native.nearestIdNative(col("v"), centroids.map(_.j), centroids.map(_.c)))
     graft.sources.Sinks.writeBucketed(
       cells.select(col("cell"), col("vec_id"), col("v")), table, buckets,
       Seq("cell"), path)
@@ -768,7 +765,7 @@ object Similarity {
       centroids: Seq[KMeans.Centroid], nQueries: Int = 5, nProbe: Int = 2,
       k: Int = 10): DataFrame = {
     val assigned = emb2v(delta).withColumn("cell",
-      nearestId(col("v"), centroids.map(_.j), centroids.map(_.c)))
+      native.nearestIdNative(col("v"), centroids.map(_.j), centroids.map(_.c)))
       .select(col("cell"), col("vec_id"), col("v"))
     val cells = emb.sparkSession.table(table)
       .select(col("cell"), col("vec_id"), col("v"))
@@ -792,7 +789,7 @@ object Similarity {
       fromTable: String, delta: DataFrame, centroids: Seq[KMeans.Centroid],
       toTable: String, buckets: Int = 8, path: Option[String] = None): Unit = {
     val assigned = emb2v(delta).withColumn("cell",
-      nearestId(col("v"), centroids.map(_.j), centroids.map(_.c)))
+      native.nearestIdNative(col("v"), centroids.map(_.j), centroids.map(_.c)))
       .select(col("cell"), col("vec_id"), col("v"))
     graft.sources.Sinks.writeBucketed(
       spark.table(fromTable).select(col("cell"), col("vec_id"), col("v"))
@@ -837,7 +834,6 @@ object Similarity {
     */
   def lshTopK(emb: DataFrame, nQueries: Int = 5, bits: Int = 8, tables: Int = 4,
       dim: Int = 64, k: Int = 10): DataFrame = {
-    import graft.plans.native
     val signs = lshSigns(bits * tables, dim)
     val e = emb2v(emb)
     def keyCol(t: Int): Column = (0 until bits).map { b =>
@@ -888,7 +884,6 @@ object Similarity {
     */
   def knnGraph(emb: DataFrame, centroids: Seq[KMeans.Centroid],
       nProbe: Int = 2, k: Int = 4): DataFrame = {
-    import graft.plans.native
     val ids = centroids.map(_.j)
     val cs = centroids.map(_.c)
     val e = emb2v(emb)
@@ -1187,7 +1182,6 @@ object Similarity {
       : org.apache.spark.sql.Dataset[T] = {
     require(supers.isEmpty || broadcastAssign,
       "two-level routing is a broadcast-assignment lever; literal plans stay flat")
-    import graft.plans.native
     val spark = emb.sparkSession
     import spark.implicits._
     val ids = centroids.map(_.j)
@@ -1577,7 +1571,6 @@ object Similarity {
     */
   def mmrSelect(emb: DataFrame, queryId: Long = 0L, poolSize: Int = 20,
       k: Int = 5, lambda: Double = 0.5): DataFrame = {
-    import graft.plans.native
     val spark = emb.sparkSession
     val e = emb2v(emb)
     val qv = e.filter(col("vec_id") === queryId).head().getSeq[Double](1)
@@ -1744,8 +1737,8 @@ object Similarity {
     val ids = centroids.map(_.j)
     val cs = centroids.map(_.c)
     val a = Par.widenBy(emb2v(emb), col("vec_id")).select(col("vec_id"),
-      nearestId(col("v"), ids, cs).as("cell"),
-      round(nearestSqDist(col("v"), cs) * 1e6).cast("long").as("d2_e6"))
+      native.nearestIdNative(col("v"), ids, cs).as("cell"),
+      round(native.nearest_sq_dist(col("v"), cs) * 1e6).cast("long").as("d2_e6"))
     val st = a.groupBy("cell").agg(count(lit(1)).as("cell_n"),
       sum("d2_e6").as("s1"), sum(col("d2_e6") * col("d2_e6")).as("s2"))
     def d(c: String) = col(c).cast("double")
@@ -1772,7 +1765,6 @@ object Similarity {
     */
   def hardNegatives(emb: DataFrame, centroids: Seq[KMeans.Centroid],
       nProbe: Int = 2, k: Int = 3): DataFrame = {
-    import graft.plans.native
     val ids = centroids.map(_.j)
     val cs = centroids.map(_.c)
     val e = Par.widenBy(emb, col("vec_id")) // assign + pair re-rank (r18)
@@ -2175,7 +2167,7 @@ object Similarity {
   private def ivfSq8Cells(emb: DataFrame, centroids: Seq[KMeans.Centroid],
       mn: Seq[Double], mx: Seq[Double]): DataFrame =
     emb2v(emb).select(col("vec_id"),
-      nearestId(col("v"), centroids.map(_.j), centroids.map(_.c)).as("cell"),
+      native.nearestIdNative(col("v"), centroids.map(_.j), centroids.map(_.c)).as("cell"),
       sq8CodeCol(mn, mx).as("codes"))
 
   /** BUILD the IVF-SQ8 index once: (cell, vec_id, codes) persisted as a
@@ -2339,7 +2331,7 @@ object Similarity {
       val subStructs = (0 until m).map { s =>
         val sv = slice(col("v"), s * sub + 1, sub)
         struct(lit(s).as("s"),
-          graft.plans.native.nearestIdNative(sv, (0L until k.toLong).toSeq,
+          native.nearestIdNative(sv, (0L until k.toLong).toSeq,
             cb(s)).as("code"),
           sv.as("sv"))
       }
@@ -2372,7 +2364,7 @@ object Similarity {
     val m = codebook.length
     val sub = codebook.head.head.length
     val err = (0 until m).map(s =>
-      nearestSqDist(slice(col("v"), s * sub + 1, sub), codebook(s)))
+      native.nearest_sq_dist(slice(col("v"), s * sub + 1, sub), codebook(s)))
       .reduce(_ + _)
     emb2v(emb).select(sum(round(err * 1e6).cast("long")).as("e"))
       .head().getLong(0)
@@ -2383,16 +2375,16 @@ object Similarity {
     * ties → lowest code, the [[graft.functions.VectorOps.nearestId]] fold)
     * plus the packed radix-k word. At dim=64/m=8/k=16 that is 4 bytes per
     * vector against 512 raw — the 128× scan-size cut. Codebook rides as
-    * literals: zero shuffle, zero joins, codegen-friendly per-row argmin.
+    * literals: zero shuffle, zero joins, one argmin kernel call per subspace.
     */
   def pqEncode(emb: DataFrame, codebook: Seq[Seq[Seq[Double]]]): DataFrame = {
     val m = codebook.length
     val k = codebook.head.length
     val sub = codebook.head.head.length
-    // codegen'd argmin kernel — bit-identical to the VectorOps.nearestId
-    // HOF fold (the km_assign_native parity), one fused loop per subspace
+    // one NearestCentroid kernel call per subspace, from generated code —
+    // bit-identical to the VectorOps.nearestId fold (pinned in PlansSpec)
     val codes = (0 until m).map { s =>
-      graft.plans.native.nearestIdNative(slice(col("v"), s * sub + 1, sub),
+      native.nearestIdNative(slice(col("v"), s * sub + 1, sub),
         (0L until k.toLong).toSeq, codebook(s)).as(s"c$s")
     }
     val factors = Seq.iterate(1L, m)(_ * k)
@@ -2521,11 +2513,11 @@ object Similarity {
     val k = codebook.head.length
     val sub = codebook.head.head.length
     val codeCols = (0 until m).map { s =>
-      nearestId(slice(col("v"), s * sub + 1, sub),
+      native.nearestIdNative(slice(col("v"), s * sub + 1, sub),
         (0L until k.toLong).toSeq, codebook(s)).as(s"c$s")
     }
     emb2v(emb).select(col("vec_id") +:
-      nearestId(col("v"), centroids.map(_.j), centroids.map(_.c)).as("cell") +:
+      native.nearestIdNative(col("v"), centroids.map(_.j), centroids.map(_.c)).as("cell") +:
       codeCols: _*)
   }
 
@@ -2612,7 +2604,6 @@ object Similarity {
     */
   def pqRerankTopK(emb: DataFrame, codebook: Seq[Seq[Seq[Double]]],
       nQueries: Int = 5, shortlist: Int = 50, kNbrs: Int = 10): DataFrame = {
-    import graft.plans.native
     val short = pqAdcTopK(emb, codebook, nQueries, shortlist)
       .select(col("q_id"), col("n_id"))
     val e = emb2v(emb)
@@ -2657,7 +2648,6 @@ object Similarity {
     */
   def kcenter(emb: DataFrame, k: Int = 6): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    import graft.plans.native
     val spark = emb.sparkSession
     val e = emb2v(emb)
     val seedRows = e.filter(col("vec_id") === 0L).select("v").limit(1).collect()

@@ -329,43 +329,38 @@ object native {
       GraftColumnShim.expression(i), GraftColumnShim.expression(y),
       sampleIds, sampleJs, sampleYs, dScale))
 
-  /** Squared distance to the nearest of a literal centroid set as ONE
-    * codegen'd call — bit-identical, faster replacement for the interpreted
-    * `VectorOps.nearestSqDist` HOF fold (see [[NearestSqDistLit]]).
+  private def nearest(y: Column, cs: Column, ids: Option[Column]): Column =
+    GraftColumnShim.column(NearestCentroid(GraftColumnShim.expression(y),
+      GraftColumnShim.expression(cs), ids.map(GraftColumnShim.expression)))
+
+  /** Squared distance to the nearest of a literal centroid set — the
+    * `VectorOps.nearestSqDist` fold, bit-identical, as one codegen'd call
+    * (see [[NearestCentroid]]).
     */
   def nearest_sq_dist(y: Column, cs: Seq[Seq[Double]]): Column =
-    GraftColumnShim.column(NearestSqDistLit(
-      GraftColumnShim.expression(y), cs.map(_.toArray).toArray))
+    nearest(y, typedlit(cs), None)
 
-  /** `VectorOps.nearestId` with the native distance kernel. */
+  /** Id of the nearest of a literal centroid set — the `VectorOps.nearestId`
+    * fold (strict `<`, the earliest centroid wins a tie), bit-identical, as
+    * one codegen'd call (see [[NearestCentroid]]).
+    */
   def nearestIdNative(y: Column, ids: Seq[Long], cs: Seq[Seq[Double]]): Column =
-    nearestIdCols(y, typedlit(ids), typedlit(cs))
+    nearest(y, typedlit(cs), Some(typedlit(ids)))
 
   /** [[nearestIdNative]] with the centroid set supplied as COLUMNS
     * (`ids: array<long>`, `cs: array<array<double>>`) instead of literals —
-    * same fold order and tie-breaking, so assignments are identical. Lets
-    * iterative callers ship centroids as broadcast DATA: the plan (and the
-    * generated whole-stage code) stays constant across Lloyd iterations
-    * instead of being re-analyzed/re-compiled for every new literal set.
+    * the same kernel, so assignments are identical. Lets iterative callers
+    * ship centroids as broadcast DATA: the plan (and the generated
+    * whole-stage code) stays constant across Lloyd iterations instead of
+    * being re-analyzed/re-compiled for every new literal set.
     */
-  def nearestIdCols(y: Column, ids: Column, cs: Column): Column = {
-    val pairs = zip_with(ids, cs,
-      (j, c) => struct(j.as("j"), sq_dist(c, y).as("d")))
-    aggregate(
-      pairs,
-      struct(lit(-1L).as("j"), lit(Double.MaxValue).as("d")),
-      (acc, x) => when(x.getField("d") < acc.getField("d"), x).otherwise(acc),
-      acc => acc.getField("j"))
-  }
+  def nearestIdCols(y: Column, ids: Column, cs: Column): Column =
+    nearest(y, cs, Some(ids))
 
-  /** `VectorOps.nearestSqDist` with column-supplied centroids
-    * (`cs: array<array<double>>`) and the native kernel — same min fold,
-    * value-identical; the constant-plan building block for iterative
-    * seeding (see [[nearestIdCols]] for the rationale).
+  /** [[nearest_sq_dist]] with column-supplied centroids
+    * (`cs: array<array<double>>`): the constant-plan building block for
+    * iterative seeding (see [[nearestIdCols]] for the rationale).
     */
   def nearestSqDistCols(y: Column, cs: Column): Column =
-    aggregate(
-      transform(cs, c => sq_dist(c, y)),
-      lit(Double.MaxValue),
-      (acc, v) => when(v < acc, v).otherwise(acc))
+    nearest(y, cs, None)
 }

@@ -23,7 +23,7 @@ object StreamingOps {
     */
   def assignStream(points: DataFrame, cs: Seq[Centroid]): DataFrame =
     points.withColumn("j",
-      VectorOps.nearestId(col("Y"), cs.map(_.j), cs.map(_.c)))
+      graft.plans.native.nearestIdNative(col("Y"), cs.map(_.j), cs.map(_.c)))
 
   /** Streaming exact dedup (twin of `Dedup.exact`/`TextAnalysis.fingerprint`):
     * arriving docs are fingerprinted with the rolling content hash and

@@ -629,6 +629,121 @@ class PlansSpec extends SparkSpec {
     assert(cmp.filter(col("a") =!= col("b")).count() == 0)
   }
 
+  // ---- the NearestCentroid kernel ≡ the VectorOps HOF folds
+
+  /** File-backed points (a LocalRelation would be folded by the optimizer
+    * before codegen): random 5-d vectors, exact copies of centroids (ties),
+    * a null Y, and a NaN coordinate.
+    */
+  private lazy val nearestPts = {
+    val rnd = new scala.util.Random(11)
+    val cs = nearestCs
+    val rows = (1 to 300).map(i => (i.toLong, Option(Seq.fill(5)(rnd.nextGaussian() * 3)))) ++
+      Seq((301L, Some(cs(1))), (302L, Some(cs(3))), (303L, None),
+        (304L, Some(Seq(1.0, Double.NaN, 0.0, 2.0, -1.0))), (305L, Some(Seq.fill(5)(0.5))))
+    val dir = java.nio.file.Files.createTempDirectory("graft_nearest").toString
+    rows.toDF("i", "Y").write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+  /** Centroids with exact duplicates (positions 1 and 3, 4 and 5) so the
+    * lowest POSITION must win a tie, ids out of order so position and id
+    * differ, and one centroid with a NaN coordinate (never wins).
+    */
+  private lazy val nearestCs: Seq[Seq[Double]] = {
+    val rnd = new scala.util.Random(5)
+    val a = Seq.fill(5)(rnd.nextGaussian() * 3)
+    val b = Seq.fill(5)(rnd.nextGaussian() * 3)
+    Seq(Seq.fill(5)(rnd.nextGaussian() * 3), a, Seq.fill(5)(rnd.nextGaussian() * 3), a,
+      b, b, Seq(0.5, 0.5, Double.NaN, 0.5, 0.5))
+  }
+  private val nearestIds: Seq[Long] = Seq(70L, 60L, 50L, 40L, 30L, 20L, 10L)
+
+  /** (i, id, d2) per point, kernel in its literal and broadcast-column
+    * forms next to the HOF reference, for one centroid set.
+    */
+  private def nearestForms(ids: Seq[Long], cs: Seq[Seq[Double]]) = {
+    val set = Seq((ids, cs)).toDF("cids", "ccs")
+    nearestPts.crossJoin(broadcast(set)).select(col("i"),
+      VectorOps.nearestId(col("Y"), ids, cs).as("ref_id"),
+      VectorOps.nearestSqDist(col("Y"), cs).as("ref_d"),
+      native.nearestIdNative(col("Y"), ids, cs).as("lit_id"),
+      native.nearest_sq_dist(col("Y"), cs).as("lit_d"),
+      native.nearestIdCols(col("Y"), col("cids"), col("ccs")).as("col_id"),
+      native.nearestSqDistCols(col("Y"), col("ccs")).as("col_d"))
+  }
+
+  private def bits(r: org.apache.spark.sql.Row, f: String): Long =
+    java.lang.Double.doubleToRawLongBits(r.getDouble(r.fieldIndex(f)))
+
+  private def assertNearestAgree(rows: Array[org.apache.spark.sql.Row]): Unit =
+    rows.foreach { r =>
+      val i = r.getLong(0)
+      Seq("lit_id", "col_id").foreach(f =>
+        assert(r.getAs[Long](f) == r.getAs[Long]("ref_id"), s"$f at i=$i"))
+      Seq("lit_d", "col_d").foreach(f =>
+        assert(bits(r, f) == bits(r, "ref_d"), s"$f at i=$i"))
+    }
+
+  test("NearestCentroid ≡ VectorOps.nearestId / nearestSqDist, literal and broadcast-column forms") {
+    val rows = nearestForms(nearestIds, nearestCs).orderBy("i").collect()
+    assert(rows.length == 305)
+    assertNearestAgree(rows)
+    def at(i: Long) = rows.find(_.getLong(0) == i).get
+    // exact ties: the earliest position wins (ids 60 over 40, 30 over 20)
+    assert(at(301L).getAs[Long]("lit_id") == 60L)
+    assert(at(302L).getAs[Long]("lit_id") == 60L)
+    assert(bits(at(301L), "lit_d") == java.lang.Double.doubleToRawLongBits(0.0))
+    // null Y and a NaN coordinate: no centroid wins, the fold seeds remain
+    Seq(303L, 304L).foreach { i =>
+      assert(at(i).getAs[Long]("lit_id") == -1L, s"i=$i")
+      assert(at(i).getAs[Double]("lit_d") == Double.MaxValue, s"i=$i")
+    }
+    // the centroid with a NaN coordinate never wins, even next to its
+    // finite coordinates (i=305)
+    assert(!rows.exists(_.getAs[Long]("lit_id") == 10L))
+  }
+
+  test("NearestCentroid over an empty centroid set yields the fold seeds in every form") {
+    val rows = nearestForms(Seq.empty, Seq.empty).collect()
+    assertNearestAgree(rows)
+    rows.foreach { r =>
+      assert(r.getAs[Long]("col_id") == -1L)
+      assert(r.getAs[Double]("col_d") == Double.MaxValue)
+    }
+  }
+
+  test("NearestCentroid: interpreted evaluation ≡ generated code") {
+    val df = nearestForms(nearestIds, nearestCs).orderBy("i")
+    val generated = df.collect()
+    assertNearestAgree(generated)
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val prev = keys.map(k => spark.conf.getOption(k))
+    val interpreted = try {
+      spark.conf.set(keys(0), "false")
+      spark.conf.set(keys(1), "NO_CODEGEN")
+      nearestForms(nearestIds, nearestCs).orderBy("i").collect()
+    } finally keys.zip(prev).foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assertNearestAgree(interpreted)
+    assert(interpreted.length == generated.length)
+    interpreted.zip(generated).foreach { case (a, b) =>
+      assert(a.getLong(0) == b.getLong(0))
+      Seq("lit_id", "col_id").foreach(f => assert(a.getAs[Long](f) == b.getAs[Long](f), f))
+      Seq("lit_d", "col_d").foreach(f => assert(bits(a, f) == bits(b, f), f))
+    }
+  }
+
+  test("KMeans.assign runs its projection inside whole-stage codegen with no HOF argmin") {
+    val emb = Tables.yhEmbeddings(spark, sf("0.001"))
+    val cs = operators.KMeans.seedFirstK(emb, 5)
+    val plan = operators.KMeans.assign(emb, cs).queryExecution.executedPlan.toString
+    assert(plan.contains("*(1) Project"), s"plan:\n$plan")
+    assert(plan.contains("nearest_id("), s"plan:\n$plan")
+    assert(!plan.contains("zip_with") && !plan.contains("aggregate("), s"plan:\n$plan")
+  }
+
   test("persisted artifacts are dir-keyed: a revisited dir serves its own data") {
     // The artifact-backed queries (bucketed pair, MinHash index, IVF index,
     // partitioned events) memoize the BUILD per dir but persist to global
